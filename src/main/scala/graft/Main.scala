@@ -18,6 +18,9 @@ import graft.sinks.XbrlSinks
   * sqlite-style descriptor `<out>/fercN_xbrl_datapackage.json`, the
   * parquet descriptor `<out>/fercN_xbrl/datapackage.json`
   * (cli.py:211-236), and `<out>/fercN_xbrl_taxonomy_metadata.json`.
+  * A table that fails to write does not stop the others: the
+  * descriptors list only the tables that landed, and the run then exits
+  * non-zero naming every failed table.
   * `--jdbc-url` additionally loads every table through Spark's JDBC
   * writer — the reference's SQLite/DuckDB load (cli.py:112-126);
   * `--sqlite-path` / `--duckdb-path` (the reference's own flag names,
@@ -115,6 +118,30 @@ object Main {
     ctx.getRootLogger.warn(s"graft.Main logging to $path")
   }
 
+  /** Writes the extract's tables to `<outputDir>/fercN_xbrl/`, then the
+    * three descriptors listing only the tables that landed, then the
+    * optional JDBC load; returns the table count and the tables dir. A
+    * failed table does not stop the others: the output stays partial
+    * but described, and the call then throws naming every failed table
+    * (so the CLI exits non-zero).
+    */
+  private[graft] def writeOutputs(out: XbrlExtract.ExtractOutput, outputDir: String,
+      formNumber: Int, jdbcUrl: Option[String]): (Int, String) = {
+    val n = formNumber
+    val tablesDir = s"$outputDir/ferc${n}_xbrl"
+    val summary = XbrlSinks.writeTables(out.schemas, out.store, tablesDir).collect().toSeq
+    val written = XbrlSinks.writtenSchemas(out.schemas, summary)
+    XbrlSinks.writeString(s"$outputDir/ferc${n}_xbrl_datapackage.json",
+      XbrlSinks.datapackageJson(written, tablesDir, n))
+    XbrlSinks.writeString(s"$tablesDir/datapackage.json",
+      XbrlSinks.datapackageParquetJson(written, n))
+    XbrlSinks.writeString(s"$outputDir/ferc${n}_xbrl_taxonomy_metadata.json",
+      XbrlSinks.metadataJson(out.taxonomies))
+    XbrlSinks.requireAllWritten(summary, tablesDir)
+    jdbcUrl.foreach(url => XbrlSinks.writeJdbc(out.tables, url))
+    (written.size, tablesDir)
+  }
+
   def main(argv: Array[String]): Unit = {
     val args = parse(argv.toList, Args())
     require(args.filings.nonEmpty && args.taxonomy != null && args.outputDir != null, Usage)
@@ -135,19 +162,11 @@ object Main {
     try {
       val out = XbrlExtract.extract(spark, args.filings, args.taxonomy,
         args.formNumber, args.requestedTables, args.instancePattern)
-      val n = args.formNumber
-      val tablesDir = s"${args.outputDir}/ferc${n}_xbrl"
-      XbrlSinks.writeParquetPooled(out.tables, tablesDir)
-      XbrlSinks.writeString(s"${args.outputDir}/ferc${n}_xbrl_datapackage.json",
-        XbrlSinks.datapackageJson(out.schemas, tablesDir, n, Some(out.tables.keySet)))
-      XbrlSinks.writeString(s"$tablesDir/datapackage.json",
-        XbrlSinks.datapackageParquetJson(out.schemas, n, Some(out.tables.keySet)))
-      XbrlSinks.writeString(s"${args.outputDir}/ferc${n}_xbrl_taxonomy_metadata.json",
-        XbrlSinks.metadataJson(out.taxonomies))
-      args.jdbcUrl.foreach(url => XbrlSinks.writeJdbc(out.tables, url))
-      out.release()
-      log.info(s"wrote ${out.tables.size} tables to $tablesDir")
-      println(s"[graft.Main] wrote ${out.tables.size} tables to $tablesDir")
+      try {
+        val (n, tablesDir) = writeOutputs(out, args.outputDir, args.formNumber, args.jdbcUrl)
+        log.info(s"wrote $n tables to $tablesDir")
+        println(s"[graft.Main] wrote $n tables to $tablesDir")
+      } finally out.release()
     } finally if (!preExisting) spark.stop()
   }
 }

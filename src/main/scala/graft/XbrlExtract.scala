@@ -13,22 +13,24 @@ import graft.xbrl.TableSchema
   * archive in, lazily-planned output tables + coverage stats out, with
   * optional table filtering and instance-name pattern matching.
   *
-  * Nothing materializes until a sink runs each table's plan; at cluster
-  * scale the per-table builds are independent Spark jobs over the same
-  * persisted parse, so they schedule concurrently and share the scan.
+  * Nothing materializes until a sink runs each table's plan; every
+  * table is a map-only projection of ONE persisted grouped fact store,
+  * so writing all of them costs one corpus aggregation.
   */
 object XbrlExtract {
 
-  /** `release()` unpersists the shared grouped store and the parsed
-    * filings backing `tables` — call it once every output table is
-    * materialized (long-lived callers; a CLI process exit releases
-    * implicitly).
+  /** `store` is the persisted grouped fact store every table in
+    * `tables` projects from (what [[XbrlSinks.writeTables]] writes
+    * from). `release()` unpersists it and the parsed filings backing
+    * it — call it once every output table is materialized (long-lived
+    * callers; a CLI process exit releases implicitly).
     */
   case class ExtractOutput(
       taxonomies: Seq[graft.xbrl.Taxonomy],
       schemas: Seq[TableSchema],
       tables: Map[String, DataFrame],
       stats: DataFrame,
+      store: DataFrame,
       release: () => Unit = () => ())
 
   /** Each element of `filings` may be a zip archive, a directory of
@@ -68,345 +70,18 @@ object XbrlExtract {
     val tables = schemas.map(s =>
       s.name -> FactTableBuilder.buildFromStore(s, store)).toMap
     val stats = FactTableBuilder.stats(spark, schemas, facts, contexts, meta)
-    ExtractOutput(taxonomies, schemas, tables, stats,
+    ExtractOutput(taxonomies, schemas, tables, stats, store,
       release = () => {
         store.unpersist(blocking = false)
         parsed.foreach(_.unpersist())
       })
   }
 
-  /** The reference CLI's full parquet workload over an ALREADY-PARSED
-    * filing store (xbrl.py:86-140 + cli.py:101-130, one measured run):
-    * build every table in `schemas` from the shared parse, write each to
-    * `<outDir>/tables/<name>.parquet`, write the validated parquet
-    * datapackage descriptor and the taxonomy metadata JSON, and return
-    * one summary row per table `(table_name, n_rows, n_cols, error)`.
-    *
-    * Scale shape: the corpus is aggregated ONCE into the shared grouped
-    * fact store ([[graft.plans.FactTableBuilder.groupedStore]] — three
-    * exchanges total, persisted here unless the caller hands in its own
-    * cached copy), after which every table is a map-only
-    * filter-projection write over that store: no per-table shuffle, no
-    * per-table corpus pass, and the archive itself is parsed once by
-    * the `parsed` store the caller holds. Row counts piggyback on the
-    * write jobs via `observe` (no second pass over any table). The
-    * independent per-table jobs are submitted from a bounded driver
-    * pool — exactly how this schedules on a real cluster, where
-    * concurrent small jobs backfill executor slots a single serial loop
-    * would leave idle; the driver holds only table names and counts
-    * (metadata), never table data.
-    */
-  /** Upper-bound per-table row counts from the shared store in ONE job:
-    * explode each store row's fact names against the broadcast
-    * (name, period) -> table mapping and count distinct store rows per
-    * table. Overcounts only rows the per-table axis-subset filter later
-    * drops. The driver receives one count per TABLE — taxonomy-bounded
-    * metadata (255 rows for ferc1), never data-scaled.
-    *
-    * This IS one extra aggregation pass over the store beyond the
-    * store's own materialization; it has never registered in the x05
-    * profile (the store is persisted, the pass is a cached scan into a
-    * 255-row agg). If it ever does, piggyback the counts on the store's
-    * materialization via `observe` metrics instead of a second pass.
-    */
-  private[graft] def estimateTableRows(
-      spark: SparkSession,
-      schemas: Seq[TableSchema],
-      store: DataFrame): Map[String, Long] = {
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    val mapping = schemas
-      .flatMap(t => t.dataColumns.map(c => (c.name, t.periodType == "instant", t.name)))
-      .toDF("name", "instant", "table_name")
-    store
-      .select(col("filing_name"), col("c_id"), col("instant"),
-        explode(map_keys(col("factmap"))).as("name"))
-      .join(broadcast(mapping), Seq("name", "instant"))
-      .select("table_name", "filing_name", "c_id").distinct()
-      .groupBy("table_name").count()
-      .as[(String, Long)]
-      .collect().toMap // one row per table: metadata, not data
-  }
-
-  /** Partial-output semantics: a failed table job surfaces as its
-    * summary row's `error` (the other tables still write and report
-    * counts — one transient failure must not destroy a 255-table run's
-    * record); the descriptor, written only AFTER the table jobs finish,
-    * lists exactly the tables that succeeded, so it never references
-    * missing or partial data. A rerun into the same `outDir` repairs
-    * failed tables via overwrite. If `timeout` expires, the in-flight
-    * write jobs are cancelled through their job group and the run
-    * throws — no descriptor is written.
-    *
-    * File sizing: each table writes `ceil(rows / targetRowsPerFile)`
-    * files (min 1), from a one-job per-table row estimate over the
-    * store — ferc1-sized tables keep the reference's one-file-per-table
-    * layout (cli.py:211-230) while a mega-table's write parallelizes by
-    * default instead of funnelling through one task.
-    *
-    * Batched writes (r18, guide §2.2/§2.6, VERDICT r17 #1): the
-    * single-file tables no longer run one SQL write COMMAND each —
-    * measured r18, each such job cost ~80 ms of task time but ~235 ms
-    * of single-threaded driver constants (stage creation + task-binary
-    * broadcast including a fresh ~100 KB serialized Hadoop conf, all on
-    * the DAGScheduler event loop), so 255 jobs serialized ~4-6 s that
-    * 32 pool threads could not hide. Now every single-file table's
-    * plan compiles to its RDD (in parallel, on the pool), the RDDs
-    * union into jobs of up to [[WriteBatch]] tables, and each task
-    * writes ITS table's parquet file through the same
-    * ParquetWriteSupport/ParquetOutputWriter machinery the SQL write
-    * command uses (same schema conversion, same codec, same
-    * rebase/legacy conf), counting rows as it writes — identical
-    * files-on-disk contract (one `part-*.snappy.parquet` + `_SUCCESS`
-    * per table dir), identical summary rows, two orders of magnitude
-    * fewer driver round-trips. Tables estimated past
-    * `targetRowsPerFile` keep the standard multi-file DataFrame write
-    * (their data amortizes the per-job constants). A table failure
-    * inside a batch is caught IN ITS TASK and reported as that table's
-    * error row — the batch's other tables still land, preserving the
-    * partial-output contract.
-    */
-  private val WriteBatch = 64
-
-  /** Java-serializable Hadoop conf carrier (the spark-internal
-    * SerializableConfiguration is private[spark]; this is the same
-    * 10-line idiom).
-    */
-  private class ConfBox(@transient var conf: org.apache.hadoop.conf.Configuration)
-      extends Serializable {
-    private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-      out.defaultWriteObject(); conf.write(out)
-    }
-    private def readObject(in: java.io.ObjectInputStream): Unit = {
-      in.defaultReadObject()
-      conf = new org.apache.hadoop.conf.Configuration(false)
-      conf.readFields(in)
-    }
-  }
-  def writeParquetDatapackage(
-      spark: SparkSession,
-      taxonomies: Seq[graft.xbrl.Taxonomy],
-      schemas: Seq[TableSchema],
-      parsed: graft.sources.ParsedFilings,
-      outDir: String,
-      formNumber: Int = 1,
-      poolSize: Int = 8,
-      store: Option[DataFrame] = None,
-      rowEstimates: Option[Map[String, Long]] = None,
-      targetRowsPerFile: Long = 4000000L,
-      timeout: scala.concurrent.duration.Duration =
-        scala.concurrent.duration.Duration(30, "min"),
-      buildTable: (TableSchema, DataFrame) => DataFrame =
-        FactTableBuilder.buildFromStore): DataFrame = {
-    require(targetRowsPerFile > 0, s"targetRowsPerFile must be positive: $targetRowsPerFile")
-    // validate the schema set at the sink boundary BEFORE any table job
-    // runs (fail fast), but WRITE the descriptor only after the jobs
-    // finish — a descriptor must never describe tables that aren't there
-    XbrlSinks.datapackageParquetJson(schemas, formNumber,
-      tableNames = Some(schemas.map(_.name).toSet))
-    val st = store.getOrElse(FactTableBuilder.groupedStore(
-      schemas, parsed.facts, parsed.contexts, parsed.meta))
-    val ownStore = store.isEmpty
-    if (ownStore) st.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val jobGroup = s"graft-datapackage-${java.util.UUID.randomUUID()}"
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(poolSize)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutor(pool)
-    type SRow = (String, Option[Long], Int, Option[String])
-    val summary =
-      try {
-        // the estimate is file-sizing metadata derived from the store —
-        // a caller holding a session-cached store hands in the estimate
-        // computed once beside it (the SharedIndex discipline) instead
-        // of re-running the explode+distinct pass per write run
-        val estimates = rowEstimates.getOrElse(estimateTableRows(spark, schemas, st))
-        def nFiles(t: TableSchema): Long = math.max(1L,
-          (estimates.getOrElse(t.name, 0L) + targetRowsPerFile - 1) / targetRowsPerFile)
-        val (smalls, bigs) = schemas.partition(nFiles(_) == 1L)
-
-        // mega-tables: the standard multi-file DataFrame write — their
-        // data amortizes the per-job constants the batch path removes
-        val bigJobs = bigs.map { t =>
-          scala.concurrent.Future {
-            // group tags this pool thread's jobs so a timeout can cancel
-            // the in-flight writes instead of letting them run headless
-            spark.sparkContext.setJobGroup(jobGroup,
-              s"graft datapackage table ${t.name}", interruptOnCancel = true)
-            try {
-              val obs = org.apache.spark.sql.Observation()
-              buildTable(t, st)
-                .coalesce(nFiles(t).toInt)
-                .observe(obs, org.apache.spark.sql.functions.count(
-                  org.apache.spark.sql.functions.lit(1)).as("n"))
-                .write.mode("overwrite").parquet(s"$outDir/tables/${t.name}.parquet")
-              (t.name, Some(obs.get("n").asInstanceOf[Long]), t.fields.size, None: Option[String])
-            } catch {
-              case scala.util.control.NonFatal(e) =>
-                (t.name, None: Option[Long], t.fields.size,
-                  Some(s"${e.getClass.getName}: ${e.getMessage}")): SRow
-            }
-          }
-        }
-
-        // single-file tables: plan each on the pool (a buildTable
-        // failure is that table's error row, like before), then write
-        // WriteBatch tables per Spark job — one task per table
-        val confBox = spark.sparkContext.broadcast(
-          new ConfBox(XbrlExtract.parquetWriteConf(spark)))
-        val builds = smalls.map { t =>
-          scala.concurrent.Future {
-            try {
-              val df = buildTable(t, st)
-              Right((t.name, t.fields.size, df.schema,
-                df.queryExecution.toRdd.coalesce(1)))
-            } catch {
-              case scala.util.control.NonFatal(e) =>
-                Left((t.name, None: Option[Long], t.fields.size,
-                  Some(s"${e.getClass.getName}: ${e.getMessage}")): SRow)
-            }
-          }
-        }
-        val batched = scala.concurrent.Future.sequence(builds).flatMap { eithers =>
-          val errRows = eithers.collect { case Left(r) => r }
-          val built = eithers.collect { case Right(b) => b }
-          val batchJobs = built.grouped(WriteBatch).toSeq.map { group =>
-            scala.concurrent.Future {
-              spark.sparkContext.setJobGroup(jobGroup,
-                s"graft datapackage batch of ${group.size} tables", interruptOnCancel = true)
-              val metas = group.map { case (name, nf, schema, _) =>
-                (name, s"$outDir/tables/$name.parquet", schema, nf)
-              }.toArray
-              val union = spark.sparkContext.union(group.map(_._4))
-              val box = confBox
-              spark.sparkContext.runJob(union,
-                (ctx: org.apache.spark.TaskContext,
-                 it: Iterator[org.apache.spark.sql.catalyst.InternalRow]) =>
-                  XbrlExtract.writeOneTable(metas(ctx.partitionId()), box.value.conf,
-                    ctx.partitionId(), it)).toSeq
-            }
-          }
-          scala.concurrent.Future.sequence(batchJobs).map(rs => errRows ++ rs.flatten)
-        }
-
-        val all = scala.concurrent.Future.sequence(bigJobs).zip(batched)
-          .map { case (b, s) => s ++ b }
-        try scala.concurrent.Await.result(all, timeout)
-        catch {
-          case e: java.util.concurrent.TimeoutException =>
-            spark.sparkContext.cancelJobGroup(jobGroup)
-            pool.shutdownNow()
-            throw new java.util.concurrent.TimeoutException(
-              s"datapackage write exceeded $timeout; in-flight table jobs cancelled " +
-                s"(job group $jobGroup): ${e.getMessage}")
-        }
-      } finally {
-        pool.shutdown()
-        if (ownStore) st.unpersist(blocking = false)
-      }
-    val written = summary.collect { case (name, _, _, None) => name }.toSet
-    if (written.nonEmpty) {
-      XbrlSinks.writeString(s"$outDir/datapackage.json",
-        XbrlSinks.datapackageParquetJson(schemas.filter(s => written(s.name)),
-          formNumber, tableNames = Some(written)))
-      XbrlSinks.writeString(s"$outDir/taxonomy_metadata.json",
-        XbrlSinks.metadataJson(taxonomies))
-    }
-    import spark.implicits._
-    val summaryRows: Seq[(String, Option[Long], Int, Option[String])] = summary
-    summaryRows.toDF("table_name", "n_rows", "n_cols", "error").orderBy("table_name")
-  }
-
-  /** Hadoop conf for the batched parquet writes: the session's Hadoop
-    * conf plus the same entries ParquetFileFormat.prepareWrite sets for
-    * a SQL parquet write command (write-support class, legacy-format /
-    * timestamp-type / rebase-mode keys, codec) — the per-TABLE schema
-    * is set on a task-local copy, since it differs per table.
-    */
-  private[graft] def parquetWriteConf(spark: SparkSession): org.apache.hadoop.conf.Configuration = {
-    val conf = spark.sessionState.newHadoopConf()
-    def sql(key: String, default: String): String =
-      try spark.conf.get(key) catch { case scala.util.control.NonFatal(_) => default }
-    conf.set("parquet.write.support.class",
-      classOf[org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport].getName)
-    conf.set("spark.sql.parquet.writeLegacyFormat",
-      sql("spark.sql.parquet.writeLegacyFormat", "false"))
-    conf.set("spark.sql.parquet.outputTimestampType",
-      sql("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS"))
-    conf.set("spark.sql.parquet.datetimeRebaseModeInWrite",
-      sql("spark.sql.parquet.datetimeRebaseModeInWrite", "EXCEPTION"))
-    conf.set("spark.sql.parquet.int96RebaseModeInWrite",
-      sql("spark.sql.parquet.int96RebaseModeInWrite", "EXCEPTION"))
-    conf.set("spark.sql.parquet.fieldId.write.enabled",
-      sql("spark.sql.parquet.fieldId.write.enabled", "true"))
-    conf.set("spark.sql.parquet.variant.annotateLogicalType.enabled",
-      sql("spark.sql.parquet.variant.annotateLogicalType.enabled", "false"))
-    val codecName = sql("spark.sql.parquet.compression.codec", "snappy")
-      .toUpperCase(java.util.Locale.ROOT) match {
-      case "NONE" | "UNCOMPRESSED" => "UNCOMPRESSED"
-      case c => c
-    }
-    conf.set("parquet.compression", codecName)
-    conf
-  }
-
-  /** One batched-write task: stream this table's rows into a single
-    * parquet part file at its final location through the same
-    * ParquetWriteSupport machinery the SQL write command uses,
-    * counting rows as they land (the observe-exact count, task-side).
-    * Idempotent under task retry (the table dir is cleared first);
-    * a per-table failure cleans up and reports as that table's error
-    * row, so the batch's other tables still land.
-    */
-  private[graft] def writeOneTable(
-      meta: (String, String, org.apache.spark.sql.types.StructType, Int),
-      baseConf: org.apache.hadoop.conf.Configuration,
-      split: Int,
-      rows: Iterator[org.apache.spark.sql.catalyst.InternalRow])
-      : (String, Option[Long], Int, Option[String]) = {
-    val (name, dirStr, schema, nFields) = meta
-    val conf = new org.apache.hadoop.conf.Configuration(baseConf)
-    org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
-      .setSchema(schema, conf)
-    val dir = new org.apache.hadoop.fs.Path(dirStr)
-    try {
-      val fs = dir.getFileSystem(conf)
-      if (fs.exists(dir)) fs.delete(dir, true)
-      fs.mkdirs(dir)
-      val codec = org.apache.parquet.hadoop.metadata.CompressionCodecName.valueOf(
-        conf.get("parquet.compression", "SNAPPY"))
-      val file = new org.apache.hadoop.fs.Path(dir,
-        f"part-$split%05d-${java.util.UUID.randomUUID()}.c000${codec.getExtension}.parquet")
-      val tid = new org.apache.hadoop.mapreduce.TaskAttemptID(
-        new org.apache.hadoop.mapreduce.TaskID(
-          new org.apache.hadoop.mapreduce.JobID("graft_datapackage", 0),
-          org.apache.hadoop.mapreduce.TaskType.MAP, split), 0)
-      val ctx = new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(conf, tid)
-      val writer = new org.apache.spark.sql.execution.datasources.parquet
-        .ParquetOutputWriter(file.toString, ctx)
-      var n = 0L
-      try { while (rows.hasNext) { writer.write(rows.next()); n += 1 } }
-      finally writer.close()
-      fs.create(new org.apache.hadoop.fs.Path(dir, "_SUCCESS"), true).close()
-      (name, Some(n), nFields, None)
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        if (sys.env.contains("GRAFT_DEBUG_WRITE")) {
-          e.printStackTrace()
-          Seq("spark.sql.parquet.writeLegacyFormat", "spark.sql.parquet.outputTimestampType",
-            "spark.sql.parquet.fieldId.write.enabled",
-            "spark.sql.parquet.annotateVariantLogicalType",
-            "spark.sql.parquet.variant.annotateLogicalType",
-            "parquet.compression", "parquet.write.support.class")
-            .foreach(k => System.err.println(s"[wpd-debug] $k = ${conf.get(k)}"))
-        }
-        try { dir.getFileSystem(conf).delete(dir, true); () }
-        catch { case scala.util.control.NonFatal(_) => () }
-        (name, None, nFields, Some(s"${e.getClass.getName}: ${e.getMessage}"))
-    }
-  }
-
   /** Extract + write everything the reference CLI writes (cli.py:101-130):
-    * parquet tables, datapackage.json, taxonomy metadata JSON.
+    * parquet tables under `<outDir>/tables/`, then datapackage.json and
+    * the taxonomy metadata JSON. The descriptor lists only the tables
+    * that landed; if any table failed, the call then throws naming
+    * each (see [[XbrlSinks.writeTables]] for the partial-output rule).
     */
   def extractToParquet(
       spark: SparkSession,
@@ -415,12 +90,14 @@ object XbrlExtract {
       outDir: String,
       formNumber: Int = 1): ExtractOutput = {
     val out = extract(spark, filings, taxonomyZip, formNumber)
-    XbrlSinks.writeParquetPooled(out.tables, s"$outDir/tables")
+    val tablesDir = s"$outDir/tables"
+    val summary = XbrlSinks.writeTables(out.schemas, out.store, tablesDir).collect().toSeq
     XbrlSinks.writeString(s"$outDir/datapackage.json",
-      XbrlSinks.datapackageJson(out.schemas, s"$outDir/tables", formNumber,
-        tableNames = Some(out.tables.keySet)))
+      XbrlSinks.datapackageJson(XbrlSinks.writtenSchemas(out.schemas, summary),
+        tablesDir, formNumber))
     XbrlSinks.writeString(s"$outDir/taxonomy_metadata.json",
       XbrlSinks.metadataJson(out.taxonomies))
+    XbrlSinks.requireAllWritten(summary, tablesDir)
     out
   }
 }

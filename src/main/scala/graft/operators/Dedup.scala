@@ -1176,16 +1176,19 @@ object Dedup {
     * doc_id with a doc-bounded collect. Two aggregation shuffles plus
     * the join — all mergeable, no skewed window anywhere.
     *
-    * NULL lines carry no content to deduplicate and are dropped (their
-    * digest joins nothing); a document consisting ONLY of null lines
-    * drops with them — spec-pinned, so callers with nullable line
-    * sources coalesce first if empty-doc rows must survive.
+    * NULL lines carry no content to deduplicate and are dropped (a null
+    * digest is filtered before the grouping and the left join, which
+    * would otherwise keep it as a unique line); a document consisting
+    * ONLY of null lines drops with them — spec-pinned, so callers with
+    * nullable line sources coalesce first if empty-doc rows must
+    * survive.
     */
   def lineDedup(lines: DataFrame, docCol: String = "doc_id",
       posCol: String = "line_no", lineCol: String = "line"): DataFrame = {
     val l = lines.select(Cols.q(docCol).as("__doc"), Cols.q(posCol).as("__pos"),
       Cols.q(lineCol).as("__line"))
       .withColumn("__h", md5(col("__line").cast("binary")))
+      .filter(col("__h").isNotNull)
     // r18: integral (doc, pos) → keep-first as min(LONG) instead of
     // min(struct) so the distinct-line aggregation HASH-aggregates
     // (see [[docPosKey]]); __keep compares the same encoded key, so

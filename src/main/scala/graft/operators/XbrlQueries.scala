@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.plans.{FactTableBuilder, FactTableSchema}
+import graft.sinks.XbrlSinks
 import graft.sources.{FilingSource, TaxonomyParser}
 import graft.xbrl.TableSchema
 
@@ -198,8 +199,8 @@ object XbrlQueries {
     * row per table with its written row/column counts; every table is a
     * map-only filter-projection over the session-cached grouped fact
     * store (built once from the ONE persisted parse — the archive is
-    * never re-parsed, the corpus never re-aggregated), and counts ride
-    * the write jobs via `observe`. Output lands under java.io.tmpdir
+    * never re-parsed, the corpus never re-aggregated), written by
+    * [[XbrlSinks.writeTables]], whose counts ride the writes. Output lands under java.io.tmpdir
     * (or GRAFT_X05_OUT), scoped `<base>/<applicationId>/run_<n>` —
     * x05 is a WRITE workload by design, and the per-app per-run scope
     * keeps concurrent JVMs out of each other's output and gives every
@@ -233,7 +234,7 @@ object XbrlQueries {
           rowEstimatesCache.remove(
             rowEstimatesCache.keys.find(_._1.sparkContext.isStopped)
               .getOrElse(rowEstimatesCache.head._1))
-        val m = graft.XbrlExtract.estimateTableRows(s, tables, store)
+        val m = XbrlSinks.estimateTableRows(s, tables, store)
         rowEstimatesCache.put((s, store), m)
         m
     }
@@ -250,16 +251,14 @@ object XbrlQueries {
     val scope = s"$base/${s.sparkContext.applicationId}"
     val run = x05Runs.incrementAndGet()
     val store = sharedStore(s)
-    // pool sized to the session's cores (floor 16): the per-table jobs
-    // are single-task writes over the tiny cached store, so the pool
-    // width IS the write concurrency — 16 on a 32-core session left
-    // half the cores idle (measured r17: 255 writes 6.2-7.2 s at 16 vs
-    // 5.4-5.8 s at 32; guide §2.6 overlap independent jobs)
-    val summary = graft.XbrlExtract.writeParquetDatapackage(
-      s, taxonomies, tables, filings(s), s"$scope/run_$run",
-      poolSize = math.max(16, s.sparkContext.defaultParallelism),
-      store = Some(store), rowEstimates = Some(rowEstimates(s, store)))
-    // writes are complete here (the datapackage writer awaits its jobs):
+    val outDir = s"$scope/run_$run"
+    val summary = XbrlSinks.writeTables(tables, store, s"$outDir/tables",
+      rowEstimates = Some(rowEstimates(s, store)))
+    val written = XbrlSinks.writtenSchemas(tables, summary.collect().toSeq)
+    XbrlSinks.writeString(s"$outDir/datapackage.json",
+      XbrlSinks.datapackageParquetJson(written))
+    XbrlSinks.writeString(s"$outDir/taxonomy_metadata.json", XbrlSinks.metadataJson(taxonomies))
+    // writes are complete here (writeTables awaits its jobs):
     // drop the predecessor so repeat runs don't accumulate
     if (run > 1) deleteRecursively(new java.io.File(s"$scope/run_${run - 1}"))
     summary

@@ -587,7 +587,7 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("x05 shape: the grouped store aggregates the corpus once, per-table builds are map-only") {
-    // the full-extract path (x05 / writeParquetDatapackage): ONE store
+    // the full-extract path (x05 / XbrlSinks.writeTables): ONE store
     // — dedup agg + map agg + context join over the persisted parse —
     // then every one of the 255 tables is a filter-projection over the
     // persisted store with ZERO exchanges of its own. This is the

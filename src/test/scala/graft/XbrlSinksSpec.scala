@@ -39,17 +39,44 @@ class XbrlSinksSpec extends SparkSpec {
 
   test("parquet sink round-trips the identification table") {
     val dir = java.nio.file.Files.createTempDirectory("graft_sink").toString
-    XbrlSinks.writeParquet(out.tables.view.filterKeys(_ == "identification_001_duration").toMap, dir)
+    XbrlSinks.writeTables(out.schemas.filter(_.name == "identification_001_duration"),
+      out.store, dir)
     val back = spark.read.parquet(s"$dir/identification_001_duration.parquet")
     assert(back.count() === 10L)
     assert(back.filter(col("report_date") === "2022-04-13").count() >= 1L)
+  }
+
+  /** x05's datapackage layout through the one writer: tables under
+    * `<dir>/tables/`, then the descriptor of the tables that landed and
+    * the taxonomy metadata.
+    */
+  private def writeDatapackage(
+      taxonomies: Seq[graft.xbrl.Taxonomy],
+      schemas: Seq[graft.xbrl.TableSchema],
+      parsed: graft.sources.ParsedFilings,
+      dir: String,
+      targetRowsPerFile: Long = 4000000L,
+      timeout: scala.concurrent.duration.Duration = scala.concurrent.duration.Duration(30, "min"),
+      buildTable: (graft.xbrl.TableSchema, org.apache.spark.sql.DataFrame) =>
+        org.apache.spark.sql.DataFrame = graft.plans.FactTableBuilder.buildFromStore)
+      : org.apache.spark.sql.DataFrame = {
+    val store = graft.plans.FactTableBuilder.groupedStore(
+      schemas, parsed.facts, parsed.contexts, parsed.meta).persist()
+    try {
+      val summary = XbrlSinks.writeTables(schemas, store, s"$dir/tables",
+        targetRowsPerFile = targetRowsPerFile, timeout = timeout, buildTable = buildTable)
+      XbrlSinks.writeString(s"$dir/datapackage.json", XbrlSinks.datapackageParquetJson(
+        XbrlSinks.writtenSchemas(schemas, summary.collect().toSeq)))
+      XbrlSinks.writeString(s"$dir/taxonomy_metadata.json", XbrlSinks.metadataJson(taxonomies))
+      summary
+    } finally store.unpersist()
   }
 
   private def partFiles(dir: String): Array[java.io.File] =
     new java.io.File(dir).listFiles().filter(f =>
       f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
 
-  test("writeParquetDatapackage writes tables + descriptors with observe-exact counts") {
+  test("writeTables writes tables + descriptors with observe-exact counts") {
     val dir = java.nio.file.Files.createTempDirectory("graft_x05_scoped").toString
     val taxonomies = graft.sources.TaxonomyParser.parseArchive(
       s"$dataDir/ferc1-xbrl-taxonomies.zip")
@@ -57,8 +84,7 @@ class XbrlSinksSpec extends SparkSpec {
       .filter(t => requested.contains(t.name))
     val parsed = graft.sources.FilingSource.fromZip(spark, s"$dataDir/ferc1-xbrl-2021.zip")
     try {
-      val summary = XbrlExtract.writeParquetDatapackage(
-        spark, taxonomies, schemas, parsed, dir).collect()
+      val summary = writeDatapackage(taxonomies, schemas, parsed, dir).collect()
       assert(summary.map(_.getString(0)).toSet === requested)
       // the observe-piggybacked counts must equal what actually landed,
       // and n_cols the written width; nothing failed
@@ -93,8 +119,8 @@ class XbrlSinksSpec extends SparkSpec {
     val parsed = graft.sources.FilingSource.fromZip(spark, s"$dataDir/ferc1-xbrl-2021.zip")
     val poison = "energy_storage_operations_small_plants_419_duration"
     try {
-      val summary = XbrlExtract.writeParquetDatapackage(
-        spark, taxonomies, schemas, parsed, dir,
+      val summary = writeDatapackage(
+        taxonomies, schemas, parsed, dir,
         buildTable = (t, st) =>
           if (t.name == poison) throw new RuntimeException("injected table failure")
           else graft.plans.FactTableBuilder.buildFromStore(t, st)).collect()
@@ -127,8 +153,8 @@ class XbrlSinksSpec extends SparkSpec {
     val parsed = graft.sources.FilingSource.fromZip(spark, s"$dataDir/ferc1-xbrl-2021.zip")
     try {
       intercept[java.util.concurrent.TimeoutException] {
-        XbrlExtract.writeParquetDatapackage(
-          spark, taxonomies, schemas, parsed, dir,
+        writeDatapackage(
+          taxonomies, schemas, parsed, dir,
           timeout = scala.concurrent.duration.Duration(1, "ms"),
           buildTable = (t, st) => {
             Thread.sleep(2000)
@@ -151,8 +177,8 @@ class XbrlSinksSpec extends SparkSpec {
       // 10 rows with a 4-row file target: the same mechanism that keeps
       // small tables at one file splits a "mega" table (relative to the
       // target) into ceil(10/4)=3 files without any manual lever
-      val summary = XbrlExtract.writeParquetDatapackage(
-        spark, taxonomies, schemas, parsed, dir, targetRowsPerFile = 4L).collect()
+      val summary = writeDatapackage(
+        taxonomies, schemas, parsed, dir, targetRowsPerFile = 4L).collect()
       assert(summary.head.getLong(1) === 10L)
       val files = partFiles(s"$dir/tables/identification_001_duration.parquet")
       assert(files.length > 1, files.map(_.getName).mkString(","))

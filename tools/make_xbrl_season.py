@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Synthetic XBRL filing-season rung (r17 — VERDICT r16 #4): replicate
 the ferc1 2021 archive N times so the full-extract pipeline (x05's 255
-pooled parquet writes, x01's parse, x03's coverage stats) is proven
+batched parquet table writes, x01's parse, x03's coverage stats) is proven
 beyond the real season's 10 filings.
 
 Each replica i of a filing keeps its XML byte-for-byte except the
